@@ -93,10 +93,6 @@ def minhash(shingle_col: Column, i: int) -> Column:
     )
 
 
-def minhash_signature(shingle_col: Column, k: int = 8) -> list[Column]:
-    return [minhash(shingle_col, i).alias(f"mh{i}") for i in range(k)]
-
-
 def simhash_bits(tok_col: Column, bits: int = 16) -> Column:
     """SimHash fingerprint as a bit-string: bit i is 1 iff the majority of
     tokens have the high bit of md5 nibble i set (nibble in 89abcdef).

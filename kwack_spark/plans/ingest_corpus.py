@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from kwack_spark.config import Serde
 from kwack_spark.functions.union import union_extract, union_tag
 from kwack_spark import scratch
+from kwack_spark.plans.pipeline import bounded_table
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.schema import avro as avro_schema
@@ -922,8 +923,6 @@ def streaming_kafka_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch code path (decode is narrow/stateless, so append mode needs no
     watermark); a Kafka readStream swaps in for the file source with no
     other change."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     reg = MockSchemaRegistry()
@@ -970,12 +969,7 @@ def streaming_kafka_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         union_extract(F.col("extra"), "u0").alias("extra_long"),
         union_extract(F.col("extra"), "u1").alias("extra_str"),
     )
-    sink = f"strm_{uuid.uuid4().hex[:8]}"
-    q = si.to_memory_sink(out, sink, output_mode="append")
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_kafka_avro_decode: stream did not finish in 300s")
-    return spark.table(sink)
+    return bounded_table(out, "streaming_kafka_avro_decode", "append")
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,9 @@ oracle can verify it bit-for-bit.
 from __future__ import annotations
 
 import contextlib
+import uuid
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from kwack_spark.functions import text as TX
@@ -27,19 +29,74 @@ _TOKS = f"list_filter(string_split({_NORM}, ' '), t -> len(t) > 0)"
 def _toks(c: str = "text") -> str:
     return _TOKS.format(c=c)
 
+# shuffle partitions for a bounded stream's state store and the iterative
+# graph loops: sized to the fixture, not to the session default
+_FEW_PARTITIONS = 8
+
+# seconds a bounded stream may take to drain before run_bounded gives up
+BOUNDED_TIMEOUT_S = 300
+
+
 @contextlib.contextmanager
-def _few_shuffle_partitions(spark, n: int = 8):
-    """Pin a small shuffle-partition count for the duration of a bounded
-    streaming replay: the state store creates one instance per shuffle
-    partition, so a caller session's default (e.g. 200) costs far more than
-    the test-scale data justifies.  Restored afterward — a real deployment
-    sizes this to the cluster, not to the replay fixture."""
+def _few_shuffle_partitions(spark):
+    """Pin ``_FEW_PARTITIONS`` shuffle partitions for the duration of the
+    block: the state store creates one instance per shuffle partition, so a
+    caller session's default (e.g. 200) costs far more than the test-scale
+    data justifies.  Restored afterward — a real deployment sizes this to
+    the cluster, not to the replay fixture."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_FEW_PARTITIONS))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def run_bounded(start, name):
+    """Run one bounded (Trigger.AvailableNow) stream to completion.
+
+    ``start`` is a zero-argument callable returning the started query.  The
+    shuffle-partition pin covers ``start()`` only: the query clones the
+    session conf when it starts, so its state width is fixed from then on
+    and the caller's session is restored before the drain.  A stream that
+    has not finished within ``BOUNDED_TIMEOUT_S`` (or whose wait is
+    interrupted) is stopped; a timeout is reported as a ``TimeoutError``
+    naming the plan, the query and its last batch id.  Returns the finished
+    query (its ``lastProgress`` stays readable)."""
+    with _few_shuffle_partitions(SparkSession.active()):
+        q = start()
+    try:
+        finished = q.awaitTermination(BOUNDED_TIMEOUT_S)
+    finally:
+        if q.isActive:
+            q.stop()
+    if not finished:
+        last = q.lastProgress
+        raise TimeoutError(
+            f"{name}: stream {q.name or q.id} did not finish in "
+            f"{BOUNDED_TIMEOUT_S}s (last batch id "
+            f"{last['batchId'] if last else None})"
+        )
+    return q
+
+
+def bounded_table(df, name, output_mode):
+    """Drain the streaming DataFrame ``df`` into a memory sink through
+    ``run_bounded`` and return the sink's rows as a DataFrame.  The sink's
+    temp view is dropped on every exit path; the returned DataFrame is
+    already resolved against the sink, so it keeps the rows."""
+    from kwack_spark.streaming import ingest as si
+
+    spark = df.sparkSession
+    sink = f"{name}_{uuid.uuid4().hex[:8]}"
+    try:
+        run_bounded(
+            lambda: si.to_memory_sink(df, sink, output_mode=output_mode), name
+        )
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
+
 
 _SHINGLES = """
     CASE WHEN len(tk) >= 3
@@ -172,7 +229,10 @@ _JAC = """CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
 # dedup_keep_best_in_cluster (keep both oracles on ONE copy of the
 # component semantics).  Edges include the over-cap bands' star edges, so
 # every engine paired with this chain must feed components from
-# dedup.minhash_lsh_dup_edges (pairs + stars), never bare pairs.
+# dedup.minhash_lsh_dup_edges (pairs + stars), never bare pairs.  `edges`
+# is MATERIALIZED: DuckDB inlines CTEs by default, and the `walk`
+# recursion would otherwise recompute the whole candidate -> Jaccard-verify
+# chain on every step (an evaluation hint only; the result is unchanged).
 _COMP_CTES = f"""pairs AS (
             SELECT c.id_a, c.id_b
             FROM cand c
@@ -180,7 +240,7 @@ _COMP_CTES = f"""pairs AS (
             JOIN ssets y ON y.doc_id = c.id_b
             WHERE {_JAC} >= 0.5
         ),
-        edges AS (
+        edges AS MATERIALIZED (
             SELECT id_a AS u, id_b AS v FROM pairs
             UNION ALL
             SELECT id_b AS u, id_a AS v FROM pairs

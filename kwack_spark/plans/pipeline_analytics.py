@@ -771,16 +771,20 @@ def udx_chunk_vowels(spark, sf_dir):
     d = T(spark, sf_dir, "documents").select(
         "doc_id", TX.normalize("text").alias("nt")
     )
-    # uuid-suffixed view: a fixed name would leak past the plan and rebind
-    # under concurrent invocations with different sf_dirs
+    # uuid-suffixed view: a fixed name would rebind under concurrent
+    # invocations with different sf_dirs.  spark.sql resolves the view
+    # eagerly, so it is dropped as soon as the query text is analyzed.
     view = f"udx_docs_{uuid.uuid4().hex[:8]}"
     d.createOrReplaceTempView(view)
-    chunked = spark.sql(
-        f"""
-        SELECT d.doc_id, c.chunk_idx, kw_vowel_count(c.chunk) AS vowels
-        FROM {view} d, LATERAL kw_chunk_words(d.nt, 20) c
-        """
-    )
+    try:
+        chunked = spark.sql(
+            f"""
+            SELECT d.doc_id, c.chunk_idx, kw_vowel_count(c.chunk) AS vowels
+            FROM {view} d, LATERAL kw_chunk_words(d.nt, 20) c
+            """
+        )
+    finally:
+        spark.catalog.dropTempView(view)
     # a GROUPED_AGG pandas UDAF cannot share an agg() with built-in
     # aggregates — two groupBys over the same shuffle key, joined back
     # (AQE plans the join shuffle-free since both sides are partitioned

@@ -2929,7 +2929,8 @@ def embedding_intrinsic_dimension(spark, sf_dir):
     # -> cluster census.  The oracle walks the same recursive closure over
     # the same brute-force kNN (cosine DESC, corpus_id tiebreak), so the
     # whole chain — ranking, mutuality, transitive closure — is graded in
-    # one hash.
+    # one hash.  `edges` is MATERIALIZED so DuckDB does not re-run the
+    # brute-force kNN on every recursion step (evaluation hint only).
     oracle=f"""
         WITH RECURSIVE
         v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2950,7 +2951,7 @@ def embedding_intrinsic_dimension(spark, sf_dir):
               ON a.query_id = b.corpus_id AND a.corpus_id = b.query_id
             WHERE a.query_id < a.corpus_id
         ),
-        edges AS (
+        edges AS MATERIALIZED (
             SELECT id_a AS u, id_b AS w FROM mutual
             UNION ALL SELECT id_b AS u, id_a AS w FROM mutual
         ),
@@ -3004,7 +3005,7 @@ def knn_mutual_components(spark, sf_dir):
     # replays' _few_shuffle_partitions).
     from kwack_spark.plans.pipeline import _few_shuffle_partitions
 
-    with _few_shuffle_partitions(spark, 8):
+    with _few_shuffle_partitions(spark):
         comp = graph.connected_components(mutual, max_iter=256)
         comp = comp.localCheckpoint()
     return (

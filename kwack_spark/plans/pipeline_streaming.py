@@ -18,13 +18,10 @@ keep the round-robin form.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import functions as F
 
 from kwack_spark.functions import text as TX
-from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling, similarity
+from kwack_spark.operators import dedup
 from kwack_spark import scratch
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
@@ -35,10 +32,11 @@ from kwack_spark.plans.pipeline import (  # shared core
     _SIMHASH64_CTES,
     _URL_CANON_CTES,
     _URL_RAW_SQL,
-    _few_shuffle_partitions,
     _url_raw_col,
     _video_keyframes,
     _video_pair_rollup,
+    bounded_table,
+    run_bounded,
 )
 
 
@@ -64,8 +62,6 @@ def streaming_window_counts(spark, sf_dir):
     (streaming/ingest.py), Trigger.AvailableNow into a memory sink; the
     returned DataFrame is the sink table.  Complete output mode emits open
     windows so end-of-stream equals batch."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events")
@@ -83,13 +79,9 @@ def streaming_window_counts(spark, sf_dir):
             F.sum(F.col("value").cast("decimal(18,3)")).cast("double").alias("total_value"),
         ],
     )
-    sink = f"strm_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_window_counts: stream did not finish in 300s")
-    return spark.table(sink).select("event_type", "window_start", "n", "total_value")
+    return bounded_table(agg, "streaming_window_counts", "complete").select(
+        "event_type", "window_start", "n", "total_value"
+    )
 
 @register(
     "streaming_quality_gate",
@@ -133,10 +125,6 @@ def streaming_quality_gate(spark, sf_dir):
     projection runs per micro-batch into an append-mode memory sink.  At
     100 TB this is the shape of inline ingest filtering: zero state, the
     gate rides the decode scan."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
     d = T(spark, sf_dir, "documents")
     replay_dir = scratch.scratch_dir(spark, "qgate_replay")
     d.repartition(4, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
@@ -178,12 +166,9 @@ def streaming_quality_gate(spark, sf_dir):
         stop_ratio.alias("stop_ratio"),
         (gopher_ok & stop_ok).alias("keep"),
     )
-    sink = f"qgate_{uuid.uuid4().hex[:8]}"
-    q = si.to_memory_sink(gated, sink, output_mode="append")
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_quality_gate: stream did not finish in 300s")
-    return spark.table(sink).select("doc_id", "n_words", "stop_ratio", "keep")
+    return bounded_table(gated, "streaming_quality_gate", "append").select(
+        "doc_id", "n_words", "stop_ratio", "keep"
+    )
 
 @register(
     "streaming_stateful_running_counts",
@@ -202,8 +187,6 @@ def streaming_stateful_running_counts(spark, sf_dir):
     per-key running count kept in the state store (streaming/ingest.py:
     stateful_running_counts), replayed over 4 micro-batches; the last
     update per key (monotone max) equals the batch aggregate."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("event_id", "event_type")
@@ -215,14 +198,8 @@ def streaming_stateful_running_counts(spark, sf_dir):
         .parquet(replay_dir)
     )
     counts = si.stateful_running_counts(stream, "event_type")
-    sink = f"state_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(counts, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stateful stream did not finish in 300s")
     return (
-        spark.table(sink)
+        bounded_table(counts, "streaming_stateful_running_counts", "update")
         .groupBy("event_type")
         .agg(F.max("n").alias("n"))
     )
@@ -250,7 +227,7 @@ def streaming_exactly_once_sink(spark, sf_dir):
     engine can read (no _spark_metadata dependency).  The query simulates
     the full failure sequence — ingest, crash-replay of batch 0, resumed
     run on the same checkpoint — and returns the landed aggregate."""
-    import uuid  # noqa: F401  (parity with sibling streaming queries)
+    import glob
 
     from kwack_spark.streaming import sink as sk
 
@@ -265,40 +242,37 @@ def streaming_exactly_once_sink(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(replay_dir)
     )
-    with _few_shuffle_partitions(spark):
-        q = sk.to_idempotent_parquet_sink(stream, land, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("exactly-once sink did not drain in 300s")
-        # crash-replay: re-deliver batch 0's payload under its original id —
-        # the overwrite must leave the landed row set unchanged.
-        # localCheckpoint materializes the rows BEFORE the overwrite deletes
-        # the directory being re-read (the real replay re-reads the source).
-        b0 = spark.read.parquet(f"{land}/kw_batch_id=0").localCheckpoint(eager=True)
-        sk.idempotent_batch_writer(land)(b0, 0)
-        b0.unpersist()
-        # resume: same checkpoint, no new input -> no batches re-processed.
-        # Asserted on the DIRECTORY SET, not just the final aggregate — a
-        # broken checkpoint that reprocessed everything could land the same
-        # row union under new batch ids and the aggregate alone would pass.
-        import glob
-
-        dirs_before = sorted(glob.glob(f"{land}/kw_batch_id=*"))
-        q2 = sk.to_idempotent_parquet_sink(
+    run_bounded(
+        lambda: sk.to_idempotent_parquet_sink(stream, land, ckpt),
+        "streaming_exactly_once_sink",
+    )
+    # crash-replay: re-deliver batch 0's payload under its original id —
+    # the overwrite must leave the landed row set unchanged.
+    # localCheckpoint materializes the rows BEFORE the overwrite deletes
+    # the directory being re-read (the real replay re-reads the source).
+    b0 = spark.read.parquet(f"{land}/kw_batch_id=0").localCheckpoint(eager=True)
+    sk.idempotent_batch_writer(land)(b0, 0)
+    b0.unpersist()
+    # resume: same checkpoint, no new input -> no batches re-processed.
+    # Asserted on the DIRECTORY SET, not just the final aggregate — a
+    # broken checkpoint that reprocessed everything could land the same
+    # row union under new batch ids and the aggregate alone would pass.
+    dirs_before = sorted(glob.glob(f"{land}/kw_batch_id=*"))
+    run_bounded(
+        lambda: sk.to_idempotent_parquet_sink(
             spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(replay_dir),
             land,
             ckpt,
+        ),
+        "streaming_exactly_once_sink",
+    )
+    dirs_after = sorted(glob.glob(f"{land}/kw_batch_id=*"))
+    if dirs_after != dirs_before:
+        raise AssertionError(
+            f"resume reprocessed input: batch dirs {dirs_before} -> {dirs_after}"
         )
-        if not q2.awaitTermination(300):
-            q2.stop()
-            raise TimeoutError("exactly-once sink resume did not drain in 300s")
-        dirs_after = sorted(glob.glob(f"{land}/kw_batch_id=*"))
-        if dirs_after != dirs_before:
-            raise AssertionError(
-                f"resume reprocessed input: batch dirs {dirs_before} -> {dirs_after}"
-            )
     return (
         sk.read_sink(spark, land)
         .groupBy("event_type")
@@ -340,23 +314,22 @@ def sink_manifest_snapshot_read(spark, sf_dir):
     land = scratch.scratch_dir(spark, "man_land")
     ckpt = scratch.scratch_dir(spark, "man_ckpt")
 
-    with _few_shuffle_partitions(spark):
-        q = sk.to_manifest_parquet_sink(
+    run_bounded(
+        lambda: sk.to_manifest_parquet_sink(
             spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 2)
             .parquet(replay_dir),
             land,
             ckpt,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("manifest sink did not drain in 300s")
-        # simulate the crash-redelivery of the final batch: same rows, new
-        # attempt, manifest repoints — the snapshot must not double-count
-        manifest = sk.read_manifest(land)
-        last = max(manifest, key=int)
-        redelivered = spark.read.parquet(manifest[last])
-        sk.manifest_batch_writer(land)(redelivered, int(last))
+        ),
+        "sink_manifest_snapshot_read",
+    )
+    # simulate the crash-redelivery of the final batch: same rows, new
+    # attempt, manifest repoints — the snapshot must not double-count
+    manifest = sk.read_manifest(land)
+    last = max(manifest, key=int)
+    redelivered = spark.read.parquet(manifest[last])
+    sk.manifest_batch_writer(land)(redelivered, int(last))
     return (
         sk.read_sink_snapshot(spark, land)
         .groupBy("event_type")
@@ -398,22 +371,21 @@ def sink_compaction_roundtrip(spark, sf_dir):
     ckpt = scratch.scratch_dir(spark, "cmp_ckpt")
     out = scratch.scratch_dir(spark, "cmp_out")
 
-    with _few_shuffle_partitions(spark):
-        q = sk.to_idempotent_parquet_sink(
+    run_bounded(
+        lambda: sk.to_idempotent_parquet_sink(
             spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(replay_dir),
             land,
             ckpt,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("compaction-roundtrip sink did not drain in 300s")
-        n = e.count()
-        target = max(1, math.ceil(n / 8))  # plan ~8 balanced output files
-        files = sk.compact_sink(spark, land, out, target_rows_per_file=target)
-        if files != math.ceil(n / target):
-            raise AssertionError(f"unexpected file plan: {files}")
+        ),
+        "sink_compaction_roundtrip",
+    )
+    n = e.count()
+    target = max(1, math.ceil(n / 8))  # plan ~8 balanced output files
+    files = sk.compact_sink(spark, land, out, target_rows_per_file=target)
+    if files != math.ceil(n / target):
+        raise AssertionError(f"unexpected file plan: {files}")
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -453,8 +425,6 @@ def streaming_running_moments(spark, sf_dir):
     emission decodes to the same mean/variance the batch DECIMAL aggregate
     produces — the monitoring-state pattern (z-score alerting off a stream)
     with replay-proof determinism."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("event_type", "value")
@@ -466,14 +436,8 @@ def streaming_running_moments(spark, sf_dir):
         .parquet(replay_dir)
     )
     moments = si.stateful_running_moments(stream, "event_type")
-    sink = f"moments_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(moments, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("moments stream did not finish in 300s")
     last = (
-        spark.table(sink)
+        bounded_table(moments, "streaming_running_moments", "update")
         .groupBy("event_type")
         .agg(F.max(F.struct("n", "s", "ss")).alias("m"))
         .select("event_type", "m.n", "m.s", "m.ss")
@@ -533,8 +497,6 @@ def streaming_quantile_sketch(spark, sf_dir):
     monitoring a 100 TB ingest runs continuously, with O(k) state per key
     and a closing extraction identical to the batch sketch's
     (operators/scale.py:kll_quantile)."""
-    import uuid
-
     from kwack_spark.operators import scale
     from kwack_spark.streaming import ingest as si
 
@@ -552,14 +514,8 @@ def streaming_quantile_sketch(spark, sf_dir):
         .parquet(replay_dir)
     )
     regs = si.stateful_kll_registers(stream, "lang", k=64)
-    sink = f"kll_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(regs, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("kll sketch stream did not finish in 300s")
     last = (
-        spark.table(sink)
+        bounded_table(regs, "streaming_quantile_sketch", "update")
         .groupBy("lang")
         .agg(F.max(F.struct("n_seen", "hrs", "rids", "vs")).alias("m"))
         .select("lang", F.arrays_zip("m.hrs", "m.rids", "m.vs").alias("z"))
@@ -591,8 +547,6 @@ def streaming_dedup_keys(spark, sf_dir):
     watermark spans the replayed range, so end-of-stream equals batch
     DISTINCT; in production the watermark bounds state to the late-data
     horizon instead of the full history."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("user_id", "event_type", "ts")
@@ -602,13 +556,7 @@ def streaming_dedup_keys(spark, sf_dir):
     deduped = si.streaming_dedup(
         stream, "ts", ["user_id", "event_type"], watermark="3650 days"
     ).select("user_id", "event_type")
-    sink = f"strmdd_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(deduped, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_dedup_keys: stream did not finish in 300s")
-    return spark.table(sink)
+    return bounded_table(deduped, "streaming_dedup_keys", "append")
 
 @register(
     "streaming_lsh_neardup",
@@ -637,8 +585,6 @@ def streaming_lsh_neardup(spark, sf_dir):
     colliding in both bands is emitted by both buckets, so the trailing
     .distinct() restores set semantics; arrival order doesn't matter, so
     the final pair set equals the batch self-join bit-for-bit."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     d = T(spark, sf_dir, "documents")
@@ -651,14 +597,8 @@ def streaming_lsh_neardup(spark, sf_dir):
         .parquet(replay_dir)
     )
     pairs = si.stateful_lsh_neardup(stream, threshold=0.5)
-    sink = f"strmlsh_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_lsh_neardup: stream did not finish in 300s")
     # a pair colliding in both bands is emitted by both buckets -> distinct
-    return spark.table(sink).distinct()
+    return bounded_table(pairs, "streaming_lsh_neardup", "append").distinct()
 
 @register(
     "streaming_static_enrich",
@@ -678,10 +618,6 @@ def streaming_static_enrich(spark, sf_dir):
     broadcast hash join inside every micro-batch, which is exactly the 100 TB
     shape — a small dim broadcast to every executor while the stream
     partitions flow through unshuffled."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
     e = T(spark, sf_dir, "events").select("event_id", "user_id")
     n = T(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     replay_dir = scratch.scratch_dir(spark, "enrich_replay")
@@ -694,13 +630,7 @@ def streaming_static_enrich(spark, sf_dir):
     enriched = stream.join(
         F.broadcast(n), (F.col("user_id") % 25) == F.col("n_nationkey")
     ).select("event_id", "user_id", F.col("n_name").alias("nation_name"))
-    sink = f"enrich_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(enriched, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_static_enrich: stream did not finish in 300s")
-    return spark.table(sink)
+    return bounded_table(enriched, "streaming_static_enrich", "append")
 
 @register(
     "streaming_video_neardup",
@@ -738,8 +668,6 @@ def streaming_video_neardup(spark, sf_dir):
     its id list (streaming/ingest.py:stateful_key_collision_pairs), and
     the shared-count rollup runs on the emitted pair rows exactly as the
     batch join's."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     kf = _video_keyframes(spark, sf_dir).select("doc_id", "frame_md5")
@@ -756,15 +684,9 @@ def streaming_video_neardup(spark, sf_dir):
     pairs = si.stateful_key_collision_pairs(
         stream, "frame_md5", "doc_id", max_ids=4096
     )
-    sink = f"strmvid_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_video_neardup: stream did not finish in 300s"
-            )
-    return _video_pair_rollup(spark.table(sink))
+    return _video_pair_rollup(
+        bounded_table(pairs, "streaming_video_neardup", "append")
+    )
 
 @register(
     "streaming_session_counts",
@@ -798,8 +720,6 @@ def streaming_session_counts(spark, sf_dir):
     complete-mode memory sink == batch session assignment.  State is
     watermark-bounded; at production rates session state is O(active
     sessions), not O(stream length)."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events")
@@ -809,15 +729,33 @@ def streaming_session_counts(spark, sf_dir):
     agg = si.session_counts(
         stream, "ts", keys=["user_id"], gap="30 minutes", watermark="10 minutes"
     )
-    sink = f"strm_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_session_counts: stream did not finish in 300s"
-            )
-    return spark.table(sink).select("user_id", "session_start", "n_events")
+    return bounded_table(agg, "streaming_session_counts", "complete").select(
+        "user_id", "session_start", "n_events"
+    )
+
+def _state_rows(prep, build, mode, name):
+    """Replay ``prep`` as a 3-file stream, drain the stateful plan
+    ``build(stream)`` to the noop sink (only the query's progress is read,
+    so no rows are kept) and return the final
+    StreamingQueryProgress.stateOperators.numRowsTotal — the number the
+    state store actually holds."""
+    spark = prep.sparkSession
+    replay_dir = scratch.scratch_dir(spark, "stateobs")
+    prep.repartition(3).write.mode("overwrite").parquet(replay_dir)
+    stream = (
+        spark.readStream.schema(prep.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(replay_dir)
+    )
+    q = run_bounded(
+        lambda: build(stream)
+        .writeStream.format("noop")
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start(),
+        name,
+    )
+    return int(q.lastProgress["stateOperators"][0]["numRowsTotal"])
 
 @register(
     "streaming_state_observability",
@@ -874,39 +812,18 @@ def streaming_state_observability(spark, sf_dir):
     claim instead of arguing it.  The scalar collects here are one count
     and one progress dict per kernel — constant-size observability, not
     data."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
-
-    def drain(prep, build_stateful):
-        replay_dir = scratch.scratch_dir(spark, "stateobs")
-        prep.repartition(3).write.mode("overwrite").parquet(replay_dir)
-        stream = (
-            spark.readStream.schema(prep.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay_dir)
-        )
-        sink = f"obs_{uuid.uuid4().hex[:8]}"
-        with _few_shuffle_partitions(spark):
-            q = si.to_memory_sink(
-                build_stateful(stream), sink, output_mode="append"
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_state_observability: stream did not finish"
-                )
-        progress = q.lastProgress
-        return int(progress["stateOperators"][0]["numRowsTotal"])
 
     rows = []
     kf = _video_keyframes(spark, sf_dir).select("doc_id", "frame_md5")
     n_keys_v = kf.select("frame_md5").distinct().count()
-    state_v = drain(
+    state_v = _state_rows(
         kf,
         lambda s: si.stateful_key_collision_pairs(
             s, "frame_md5", "doc_id", max_ids=4096
         ),
+        "append",
+        "streaming_state_observability",
     )
     rows.append(("key_collision", state_v, n_keys_v, state_v <= n_keys_v))
 
@@ -918,8 +835,11 @@ def streaming_state_observability(spark, sf_dir):
         blocks=4,
     )
     n_keys_s = prep.select("blk", "slc").distinct().count()
-    state_s = drain(
-        prep, lambda s: si.stateful_simhash_neardup(s, max_hamming=3)
+    state_s = _state_rows(
+        prep,
+        lambda s: si.stateful_simhash_neardup(s, max_hamming=3),
+        "append",
+        "streaming_state_observability",
     )
     rows.append(("simhash_sliced", state_s, n_keys_s, state_s <= n_keys_s))
 
@@ -980,42 +900,24 @@ def streaming_state_observability_sketches(spark, sf_dir):
     however long the stream runs; the CMS row is bounded by depth*width
     (4*256) regardless of user cardinality.  The scalar collects are one
     count + one progress dict per kernel — constant-size observability."""
-    import uuid
-
     from kwack_spark.operators import scale
     from kwack_spark.streaming import ingest as si
-
-    def drain(prep, build, mode):
-        replay_dir = scratch.scratch_dir(spark, "stateobs_sk")
-        prep.repartition(3).write.mode("overwrite").parquet(replay_dir)
-        stream = (
-            spark.readStream.schema(prep.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay_dir)
-        )
-        sink = f"obsk_{uuid.uuid4().hex[:8]}"
-        with _few_shuffle_partitions(spark):
-            q = si.to_memory_sink(build(stream), sink, output_mode=mode)
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_state_observability_sketches: stream stuck"
-                )
-        return int(q.lastProgress["stateOperators"][0]["numRowsTotal"])
 
     rows = []
     ev = T(spark, sf_dir, "events")
     e_types = ev.select("event_type").distinct().count()
-    state_rc = drain(
+    state_rc = _state_rows(
         ev.select("event_id", "event_type"),
         lambda s: si.stateful_running_counts(s, "event_type"),
         "update",
+        "streaming_state_observability_sketches",
     )
     rows.append(("running_counts", state_rc, e_types, state_rc <= e_types))
-    state_rm = drain(
+    state_rm = _state_rows(
         ev.select("event_type", "value"),
         lambda s: si.stateful_running_moments(s, "event_type"),
         "update",
+        "streaming_state_observability_sketches",
     )
     rows.append(("running_moments", state_rm, e_types, state_rm <= e_types))
 
@@ -1026,8 +928,11 @@ def streaming_state_observability_sketches(spark, sf_dir):
         F.col("n_chars").cast("long").alias("v"),
     )
     n_langs = d.select("lang").distinct().count()
-    state_kll = drain(
-        d, lambda s: si.stateful_kll_registers(s, "lang", k=64), "update"
+    state_kll = _state_rows(
+        d,
+        lambda s: si.stateful_kll_registers(s, "lang", k=64),
+        "update",
+        "streaming_state_observability_sketches",
     )
     rows.append(("kll_registers", state_kll, n_langs, state_kll <= n_langs))
 
@@ -1038,12 +943,13 @@ def streaming_state_observability_sketches(spark, sf_dir):
         .distinct()
         .count()
     )
-    state_cms = drain(
+    state_cms = _state_rows(
         e,
         lambda s: scale._cms_keyed(s, "user_id", depth=4, width=256, seed="cms")
         .groupBy("d", "b")
         .agg(F.count(F.lit(1)).alias("cnt")),
         "complete",
+        "streaming_state_observability_sketches",
     )
     rows.append(("cms_counters", state_cms, n_buckets, state_cms <= n_buckets))
 
@@ -1073,8 +979,6 @@ def streaming_url_dedup(spark, sf_dir):
     size, not the crawl size — and the watermark bounds it to the re-crawl
     horizon in production (spanned fully here so the replay equals batch
     DISTINCT)."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     d = T(spark, sf_dir, "documents").select(
@@ -1095,13 +999,7 @@ def streaming_url_dedup(spark, sf_dir):
     deduped = si.streaming_dedup(
         canon, "ts", ["canon_url"], watermark="3650 days"
     ).select("canon_url")
-    sink = f"strmurl_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(deduped, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_url_dedup: stream did not finish in 300s")
-    return spark.table(sink)
+    return bounded_table(deduped, "streaming_url_dedup", "append")
 
 @register(
     "streaming_click_purchase_join",
@@ -1135,10 +1033,6 @@ def streaming_click_purchase_join(spark, sf_dir):
     the scale failure mode of unconstrained stream joins.  Append mode:
     matches emit as soon as both sides arrive; end-of-replay equals the
     batch interval join bit-for-bit."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
     e = T(spark, sf_dir, "events")
     replay_dir = scratch.scratch_dir(spark, "ssjoin_replay")
     e.write.mode("overwrite").parquet(replay_dir)
@@ -1170,15 +1064,7 @@ def streaming_click_purchase_join(spark, sf_dir):
         "click_ts",
         "purchase_ts",
     )
-    sink = f"ssj_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(joined, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_click_purchase_join: stream did not finish in 300s"
-            )
-    return spark.table(sink).select(
+    return bounded_table(joined, "streaming_click_purchase_join", "append").select(
         "user_id", "click_id", "purchase_id", "click_ts", "purchase_ts"
     )
 
@@ -1212,10 +1098,6 @@ def streaming_latest_per_key(spark, sf_dir):
     into the per-key maxima map-side before the state update.  The
     (ts, event_id) struct ordering makes the tie-break total, so the
     landed view is bit-equal to the batch window."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
     e = T(spark, sf_dir, "events")
     replay_dir = scratch.scratch_dir(spark, "latest_replay")
     e.write.mode("overwrite").parquet(replay_dir)
@@ -1227,15 +1109,7 @@ def streaming_latest_per_key(spark, sf_dir):
         F.max_by("value", ord_key).alias("latest_value"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    sink = f"latest_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_latest_per_key: stream did not finish in 300s"
-            )
-    return spark.table(sink).select(
+    return bounded_table(agg, "streaming_latest_per_key", "complete").select(
         "user_id", "latest_ts", "latest_event_id", "latest_value", "n_events"
     )
 
@@ -1272,8 +1146,6 @@ def streaming_simhash_neardup(spark, sf_dir):
     agreeing on several slices is emitted by each, so the trailing
     .distinct() restores set semantics; arrival order doesn't matter, so
     the final pair set equals the batch self-join bit-for-bit."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     d = T(spark, sf_dir, "documents")
@@ -1288,13 +1160,7 @@ def streaming_simhash_neardup(spark, sf_dir):
         .parquet(replay_dir)
     )
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmsh_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_simhash_neardup: stream did not finish in 300s")
-    return spark.table(sink).distinct()
+    return bounded_table(pairs, "streaming_simhash_neardup", "append").distinct()
 
 @register(
     "streaming_audio_neardup",
@@ -1327,8 +1193,6 @@ def streaming_audio_neardup(spark, sf_dir):
     text, image, and audio fingerprints in batch, incremental, AND
     streaming mode.  Arrival order cannot change the end-of-stream pair
     set; the trailing .distinct() collapses multi-slice agreements."""
-    import uuid
-
     from kwack_spark.operators import multimodal as mm
     from kwack_spark.streaming import ingest as si
 
@@ -1346,15 +1210,7 @@ def streaming_audio_neardup(spark, sf_dir):
         .parquet(replay_dir)
     )
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmau_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_audio_neardup: stream did not finish in 300s"
-            )
-    return spark.table(sink).distinct()
+    return bounded_table(pairs, "streaming_audio_neardup", "append").distinct()
 
 @register(
     "streaming_image_neardup",
@@ -1381,8 +1237,6 @@ def streaming_image_neardup(spark, sf_dir):
     (streaming/ingest.py:stateful_simhash_neardup — the one kernel now
     serving text, image, and audio in streaming mode).  The trailing
     .distinct() collapses multi-slice agreements."""
-    import uuid
-
     from kwack_spark.operators import multimodal as mm
     from kwack_spark.streaming import ingest as si
 
@@ -1398,15 +1252,7 @@ def streaming_image_neardup(spark, sf_dir):
         .parquet(replay_dir)
     )
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmim_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_image_neardup: stream did not finish in 300s"
-            )
-    return spark.table(sink).distinct()
+    return bounded_table(pairs, "streaming_image_neardup", "append").distinct()
 
 @register(
     "streaming_change_point",
@@ -1458,8 +1304,6 @@ def streaming_change_point(spark, sf_dir):
     (streaming/ingest.py:stateful_cusum_days), take each type's last
     emission, and decode the day ordinal back to the timestamp the batch
     query reports."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("event_type", "ts")
@@ -1471,14 +1315,8 @@ def streaming_change_point(spark, sf_dir):
         .parquet(replay_dir)
     )
     states = si.stateful_cusum_days(stream, "event_type", "ts")
-    sink = f"cusum_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(states, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("cusum stream did not finish in 300s")
     last = (
-        spark.table(sink)
+        bounded_table(states, "streaming_change_point", "update")
         .groupBy("event_type")
         .agg(
             F.max(
@@ -1525,8 +1363,6 @@ def streaming_video_dhash_neardup(spark, sf_dir):
     decode kernel runs once while staging the replay (a production
     stream decodes per arriving video the same way); the stateful stage
     sees only (kfid, fp, blk, slc) rows."""
-    import uuid
-
     from kwack_spark.operators import multimodal as mm
     from kwack_spark.streaming import ingest as si
 
@@ -1555,16 +1391,8 @@ def streaming_video_dhash_neardup(spark, sf_dir):
         .parquet(replay_dir)
     )
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmvd_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_video_dhash_neardup: stream did not finish in 300s"
-            )
     return (
-        spark.table(sink)
+        bounded_table(pairs, "streaming_video_dhash_neardup", "append")
         .distinct()
         .select(
             F.expr("id_a div 16").alias("id_a"),

@@ -1105,9 +1105,14 @@ def ddl_create_view(spark, sf_dir):
         GROUP BY n.n_nationkey, n.n_name
         """
     )
-    return spark.sql(
-        "SELECT n_nationkey, n_name, n_cust FROM nation_custcnt WHERE n_cust >= 50"
-    )
+    # the SELECT is resolved when spark.sql returns, so the view can go:
+    # a query must not leave session state behind
+    try:
+        return spark.sql(
+            "SELECT n_nationkey, n_name, n_cust FROM nation_custcnt WHERE n_cust >= 50"
+        )
+    finally:
+        spark.catalog.dropTempView("nation_custcnt")
 
 
 _GROUP_BY_ALL_SQL = """

@@ -603,8 +603,10 @@ def to_memory_sink(
     continuous: bool = False,
     processing_time: str | None = None,
 ) -> StreamingQuery:
-    """Stream into an in-memory table — the engine's live-table surface and
-    the test harness.
+    """Stream into an in-memory table named ``name``: the engine's live
+    mode and the streaming tests use it directly.  Registered plans go
+    through ``plans/pipeline.py:bounded_table`` instead, which owns the
+    sink name, the timeout and dropping the view.
 
     ``continuous=False`` (default): Trigger.AvailableNow — drain the current
     backlog and stop.  ``continuous=True``: keep the micro-batch loop running

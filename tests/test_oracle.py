@@ -3,9 +3,12 @@ exactly at sf0.01 (the driver's correctness scale)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from kwack_spark.plans.registry import QUERIES, _load_all
+from kwack_spark.sources.parquet import TABLES
 from tests.conftest import SF_ORACLE
 from tests.oracle_harness import compare_query, duck_connect
 
@@ -21,18 +24,36 @@ def duck():
     con.close()
 
 
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@contextlib.contextmanager
+def _no_residue(spark, name):
+    """A query may register the source tables as views; it must leave no
+    other temp view and no active stream in the long-lived session."""
+    before = _temp_views(spark)
+    yield
+    active = [q.name for q in spark.streams.active]
+    assert not active, f"{name}: left active streams {active}"
+    added = _temp_views(spark) - before - set(TABLES)
+    assert not added, f"{name}: left temp views {sorted(added)}"
+
+
 @pytest.mark.parametrize("name", ORACLED)
 def test_oracle_match(spark, duck, name):
     e = QUERIES[name]
-    ok, detail = compare_query(spark, duck, e.fn, e.oracle, SF_ORACLE)
+    with _no_residue(spark, name):
+        ok, detail = compare_query(spark, duck, e.fn, e.oracle, SF_ORACLE)
     assert ok, f"{name}: {detail}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_runs(spark, name):
     e = QUERIES[name]
-    df = e.fn(spark, SF_ORACLE)
-    assert df.count() >= 0
+    with _no_residue(spark, name):
+        df = e.fn(spark, SF_ORACLE)
+        assert df.count() >= 0
     assert len(df.schema.fields) > 0
     from tests.oracle_harness import ungradable_columns
 

@@ -839,3 +839,75 @@ def test_footer_row_count_rejects_remote_file_authority(spark, tmp_path):
     assert sk._footer_row_count("file://nas-host/data") is None
     with pytest.raises(ValueError, match="overlaps"):
         sk._check_disjoint_paths("file://nas-host/data", "file://nas-host/data/out")
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _keyed_stream(spark, tmp_path):
+    """40 rows over 5 keys replayed as a 2-file stream."""
+    path = str(tmp_path / "keyed")
+    spark.range(40).selectExpr("id", "id % 5 AS k").repartition(2).write.parquet(
+        path
+    )
+    return (
+        spark.readStream.schema("id long, k long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+
+
+def test_bounded_table_pins_state_width_at_start_only(spark, tmp_path, monkeypatch):
+    """bounded_table's stateful run gets the fixed 8-partition state width
+    whatever the caller's session says, the caller's
+    spark.sql.shuffle.partitions is back when it returns, and the returned
+    rows outlive the dropped memory-sink view."""
+    from kwack_spark.plans import pipeline as P
+
+    started = []
+    real = P.run_bounded
+
+    def spy(start, name):
+        started.append(real(start, name))
+        return started[-1]
+
+    monkeypatch.setattr(P, "run_bounded", spy)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        views = _temp_views(spark)
+        out = P.bounded_table(
+            _keyed_stream(spark, tmp_path).groupBy("k").count(),
+            "t_bounded_width",
+            "complete",
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    (q,) = started
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 8
+    assert _temp_views(spark) == views
+    assert sorted((r.k, r["count"]) for r in out.collect()) == [
+        (k, 8) for k in range(5)
+    ]
+
+
+def test_run_bounded_timeout_names_query_and_cleans_up(spark, tmp_path, monkeypatch):
+    """A stream that outlives the timeout is stopped and reported by name;
+    no active stream and no temp view are left behind.  (pyspark's
+    awaitTermination rejects a zero timeout, so 1 ms stands in for it.)"""
+    import pytest
+
+    from kwack_spark.plans import pipeline as P
+
+    monkeypatch.setattr(P, "BOUNDED_TIMEOUT_S", 0.001)
+    views = _temp_views(spark)
+    with pytest.raises(TimeoutError, match="t_bounded_timeout"):
+        P.bounded_table(
+            _keyed_stream(spark, tmp_path).groupBy("k").count(),
+            "t_bounded_timeout",
+            "complete",
+        )
+    assert not spark.streams.active
+    assert _temp_views(spark) == views
